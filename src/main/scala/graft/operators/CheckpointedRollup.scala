@@ -1,30 +1,37 @@
 package graft.operators
 
-import java.io.{InputStreamReader, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
 import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
-import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.sources.IceTable
+import graft.sources.{IceTable, MetaFile}
 
 /** Resumable tier build: raw IceTable → 1m-tier parquet, one event-time DAY
   * per work unit, each unit committed with a lineage-carrying checkpoint.
   *
-  * Checkpoint JSON per day: {source_snapshot_id, bucket_lo_us, bucket_hi_us,
-  * rows, bytes, wall_ms} (wall_ms = the day's amortized share of its batch
-  * job under day-unit batching) — exactly the north rule's "per-partition
-  * checkpoints carrying lineage (source snapshot-id, bucket range) and
-  * row/byte metrics", and the engine analog of the reference's
+  * Checkpoint JSON per day: {source_snapshot_id, source_files_fp,
+  * bucket_lo_us, bucket_hi_us, rows, bytes, wall_ms, schema} (wall_ms = the
+  * day's amortized share of its batch job under day-unit batching; schema =
+  * the day's output Spark schema, which a downstream `DayDirSource` hands
+  * to the parquet reader so no scan launches a schema-inference job —
+  * markers written before the field existed fall back to inference, and
+  * the field never enters a fingerprint) — exactly the north rule's
+  * "per-partition checkpoints carrying lineage (source snapshot-id, bucket
+  * range) and row/byte metrics", and the engine analog of the reference's
   * executed=/used= provenance on every egress
-  * (/root/reference/scripts/daily-measures.R:242-251).
+  * (/root/reference/scripts/daily-measures.R:242-251). Markers are written
+  * through `MetaFile` (temp + one atomic move; java.nio on local FS).
   *
   * Resume semantics: a day is skipped iff its marker exists AND its
   * source-file FINGERPRINT is unchanged — the fingerprint hashes the
@@ -72,9 +79,14 @@ object CheckpointedRollup {
   }
 
   /** DaySource over an IceTable: manifest stats prune the scan to files
-    * overlapping the day; fingerprints hash those files' manifest entries. */
+    * overlapping the day; fingerprints hash those files' manifest entries.
+    * The table's current snapshot is PINNED at construction: days,
+    * fingerprints, scans and the lineage id all answer for that one
+    * snapshot (one manifest resolution per run), so an append landing
+    * mid-run is neither half-read nor recorded under the wrong id. */
   final class IceDaySource(table: IceTable, tsCol: String = "ts") extends DaySource {
-    private def files = table.currentLiveFiles
+    private val pinned = table.pin()
+    private def files = pinned.files
     def pendingDays: Seq[Long] =
       files.flatMap(f => (f.minTsUs / DayUs) to (f.maxTsUs / DayUs)).distinct.sorted.map(_ * DayUs)
     def dayFingerprint(dayUs: Long): Long = {
@@ -86,7 +98,7 @@ object CheckpointedRollup {
       }
     }
     def scanDay(spark: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame =
-      table.scan(spark, dayUs, dayUs + DayUs - 1)
+      table.scanPinned(spark, pinned, dayUs, dayUs + DayUs - 1)
         .where(col(tsCol) >= timestamp_micros(lit(dayUs)) && col(tsCol) < timestamp_micros(lit(dayUs + DayUs)))
     override def scanDays(spark: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame = {
       // one stat-pruned scan over the batch's envelope; an OR of per-day
@@ -94,9 +106,9 @@ object CheckpointedRollup {
       val inDay = daysUs
         .map(d => col(tsCol) >= timestamp_micros(lit(d)) && col(tsCol) < timestamp_micros(lit(d + DayUs)))
         .reduce(_ || _)
-      table.scan(spark, daysUs.min, daysUs.max + DayUs - 1).where(inDay)
+      table.scanPinned(spark, pinned, daysUs.min, daysUs.max + DayUs - 1).where(inDay)
     }
-    def lineageId: Long = table.currentSnapshotId
+    def lineageId: Long = pinned.id
   }
 
   /** DaySource over a previous run's day-dir output: days come from the
@@ -114,18 +126,25 @@ object CheckpointedRollup {
         .map(n => n.stripPrefix("day-").stripSuffix(".json").toLong)
         .toSeq.sorted
     }
-    def dayFingerprint(dayUs: Long): Long = {
+    private def readMarker(dayUs: Long): Option[JsonNode] = {
       val p = marker(dayUs)
-      if (!fs.exists(p)) 0L
-      else {
-        val n = mapper.readTree(readFully(fs, p))
+      if (!fs.exists(p)) None else Some(mapper.readTree(MetaFile.read(fs, p)))
+    }
+    def dayFingerprint(dayUs: Long): Long =
+      readMarker(dayUs).fold(0L) { n =>
         ((n.get("source_files_fp").asLong * 31 + n.get("rows").asLong) * 31 + n.get("bytes").asLong)
       }
+    /** Read `daysUs` with the tier schema recorded in the first day's
+      * marker (one tier has one schema), inferring it only for markers
+      * written before the field existed. */
+    private def read(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame = {
+      val schema = readMarker(daysUs.head).flatMap(MetaFile.schemaOf)
+      schema.fold(sparkS.read)(sparkS.read.schema(_)).parquet(daysUs.map(d => s"$dir/day=$d"): _*)
     }
     def scanDay(sparkS: SparkSession, dayUs: Long): org.apache.spark.sql.DataFrame =
-      sparkS.read.parquet(s"$dir/day=$dayUs")
+      read(sparkS, Seq(dayUs))
     override def scanDays(sparkS: SparkSession, daysUs: Seq[Long]): org.apache.spark.sql.DataFrame =
-      sparkS.read.parquet(daysUs.map(d => s"$dir/day=$d"): _*)
+      read(sparkS, daysUs)
     def lineageId: Long = 0L
   }
 
@@ -139,22 +158,11 @@ object CheckpointedRollup {
   def dayFingerprint(source: IceTable, dayUs: Long): Long =
     new IceDaySource(source).dayFingerprint(dayUs)
 
-  private def readFully(fs: FileSystem, p: Path): String = {
-    val in = new InputStreamReader(fs.open(p), StandardCharsets.UTF_8)
-    try {
-      val sb = new StringBuilder
-      val buf = new Array[Char](4096)
-      var n = in.read(buf)
-      while (n >= 0) { sb.appendAll(buf, 0, n); n = in.read(buf) }
-      sb.toString
-    } finally in.close()
-  }
-
   def isDone(spark: SparkSession, outDir: String, dayUs: Long, fingerprint: Long): Boolean = {
     val p = markerPath(outDir, dayUs)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && {
-      val n = mapper.readTree(readFully(fs, p))
+      val n = mapper.readTree(MetaFile.read(fs, p))
       n.has("source_files_fp") && n.get("source_files_fp").asLong == fingerprint
     }
   }
@@ -213,6 +221,9 @@ object CheckpointedRollup {
     val snapId = source.lineageId
     fs.mkdirs(new Path(outDir, "_checkpoints"))
     val done = new AtomicInteger(0)
+    // the session's conf: a footer open without it builds and parses a
+    // fresh Hadoop Configuration every call
+    val footerOpts = HadoopReadOptions.builder(conf).build()
 
     // commit one completed (already renamed-into-place) day: row count from
     // the COMMITTED files' parquet footers — metadata-only (no data
@@ -220,14 +231,13 @@ object CheckpointedRollup {
     // under task retries/speculation, where each successful attempt's
     // partial scan would inflate observed metrics. The marker rows value
     // chains into dayFingerprint, so it must be durable-exact.
-    def commitDay(dayUs: Long, fp: Long, wallMs: Long): DayResult = {
+    def commitDay(dayUs: Long, fp: Long, wallMs: Long, schema: StructType): DayResult = {
       val dayDir = new Path(outDir, s"day=$dayUs")
       val status = fs.listStatus(dayDir)
       val rows = status.iterator
         .filter(_.getPath.getName.endsWith(".parquet"))
         .map { f =>
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
+          val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf), footerOpts)
           try r.getRecordCount finally r.close()
         }.sum
       // day dirs are flat, so the one listing serves both the footer walk
@@ -241,11 +251,8 @@ object CheckpointedRollup {
       node.put("rows", rows)
       node.put("bytes", bytes)
       node.put("wall_ms", wallMs)
-      val tmp = new Path(outDir, s"_checkpoints/.day-$dayUs.tmp")
-      val out = new OutputStreamWriter(fs.create(tmp, true), StandardCharsets.UTF_8)
-      try out.write(mapper.writeValueAsString(node)) finally out.close()
-      FileContext.getFileContext(new Path(outDir).toUri, conf)
-        .rename(tmp, markerPath(outDir, dayUs), Options.Rename.OVERWRITE)
+      MetaFile.putSchema(node, schema)
+      MetaFile.write(fs, conf, markerPath(outDir, dayUs), mapper.writeValueAsString(node))
       done.incrementAndGet()
       DayResult(dayUs, rows, bytes, skipped = false)
     }
@@ -263,7 +270,7 @@ object CheckpointedRollup {
         if (fs.exists(dayDir)) fs.delete(dayDir, true)
         if (!fs.rename(tmpDir, dayDir))
           throw new IllegalStateException(s"checkpoint commit: rename $tmpDir -> $dayDir failed")
-        Seq(commitDay(dayUs, fp, (System.nanoTime() - t0) / 1000000))
+        Seq(commitDay(dayUs, fp, (System.nanoTime() - t0) / 1000000, tier.schema))
       } else {
         val out = transform(source.scanDays(spark, batch.map(_._1)))
         // case-INSENSITIVE reservation check: Spark resolves columns
@@ -280,9 +287,14 @@ object CheckpointedRollup {
         withDay.write.mode("overwrite").partitionBy("day").parquet(tmpDir.toString)
         // a transform emitting rows OUTSIDE the batch's days would vanish
         // with the tmp dir below — fail fast BEFORE any day commits, so a
-        // contract violation never leaves valid markers over missing data
-        val written = fs.listStatus(tmpDir).map(_.getPath.getName)
-          .filter(_.startsWith("day=")).map(_.stripPrefix("day=").toLong).toSet
+        // contract violation never leaves valid markers over missing data.
+        // A NULL bucket lands in Hive's default partition, whose name is
+        // no day: the same violation, named as such.
+        val parsed = fs.listStatus(tmpDir).map(_.getPath.getName)
+          .filter(_.startsWith("day=")).map(_.stripPrefix("day=").toLongOption)
+        require(!parsed.contains(None),
+          "runUnits batching: transform emitted rows with a null day bucket")
+        val written = parsed.flatten.toSet
         val stray = written -- batch.map(_._1).toSet
         require(stray.isEmpty,
           s"runUnits batching: transform emitted rows outside the batch's days: ${stray.mkString(",")}")
@@ -307,7 +319,7 @@ object CheckpointedRollup {
           // wall_ms = this day's amortized share of its batch job (the
           // job is indivisible; recording the full batch wall per day
           // would overstate summed per-day wall by up to batchSize×)
-          commitDay(dayUs, fp, wallShareMs)
+          commitDay(dayUs, fp, wallShareMs, out.schema)
         }
         fs.delete(tmpDir, true)
         results

@@ -1,16 +1,16 @@
 package graft.sources
 
-import java.io.{InputStreamReader, OutputStreamWriter}
-import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, StandardCopyOption}
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Minimal Iceberg-SHAPED table layer (not the Iceberg library — no Iceberg
   * runtime ships in this environment, SURVEY.md §7.1): a directory of
@@ -49,6 +49,13 @@ import org.apache.spark.sql.functions._
   * (/root/reference/scripts/daily-measures.R:242-251) — here it is the
   * snapshot log itself.
   *
+  * SCHEMA IN THE LOG (as Iceberg and Delta keep it in table metadata):
+  * every snapshot JSON carries the table's Spark schema as `schema` (an
+  * append records the appended DataFrame's; expire and rewrite carry the
+  * parent's forward). Scans hand it to `spark.read.schema(...)`, so no read
+  * launches a parquet schema-inference job; snapshots written before the
+  * field existed have none and their scans fall back to inference.
+  *
   * Commit protocol (crash-safe, multi-writer CAS — the Iceberg
   * CAS-on-metadata-pointer idea, done as a locked no-overwrite claim):
   *   - data is written to a hidden temp dir and RENAMED into a
@@ -72,6 +79,14 @@ import org.apache.spark.sql.functions._
   *     linearized too, and a crashed holder's lock is released by the
   *     kernel (no orphaned claim state; an in-JVM monitor still
   *     serializes same-process writers cheaply);
+  *   - every metadata file (claim temp, CURRENT, keys.json) is written by
+  *     [[MetaFile]]: a full temp sibling, then one atomic move. On local FS
+  *     that is a java.nio write and `Files.move(ATOMIC_MOVE)` (with
+  *     REPLACE_EXISTING for CURRENT and keys.json), which forks no `chmod`
+  *     and leaves no `.crc` sibling, so concurrent overwriters of one file
+  *     need no `.crc` collision retry; elsewhere the claim is the
+  *     FileContext no-overwrite rename and the overwrites a FileContext
+  *     overwrite-rename;
   *   - the key index is written strictly AFTER the claim, so it can only
   *     ever be STALE, never ahead — `syncKeyIndex` heals staleness by
   *     walking just the (indexed, CURRENT] gap;
@@ -119,58 +134,30 @@ final class IceTable(val root: String) {
       files: Seq[FileEntry],
       key: Option[String] = None,
       delta: Boolean = false,
-      chainLen: Int = 0)
+      chainLen: Int = 0,
+      schema: Option[StructType] = None)
 
-  private def readFully(p: Path): String = {
-    val in = new InputStreamReader(fs.open(p), StandardCharsets.UTF_8)
-    try {
-      val sb = new StringBuilder
-      val buf = new Array[Char](4096)
-      var n = in.read(buf)
-      while (n >= 0) { sb.appendAll(buf, 0, n); n = in.read(buf) }
-      sb.toString
-    } finally in.close()
+  /** A snapshot with its live file set resolved once, so several reads
+    * (day listing, fingerprints, scans, lineage) all see one table version
+    * for the cost of one manifest resolution. `None` = empty table. */
+  case class Pinned(snapshot: Option[Snapshot], files: Seq[FileEntry]) {
+    def id: Long = snapshot.map(_.id).getOrElse(0L)
   }
 
-  /** Write `content` to `dst` atomically: temp file + overwrite-rename
-    * (FileContext rename is atomic on HDFS and local FS). */
-  private def atomicWrite(dst: Path, content: String): Unit = {
-    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp-${System.nanoTime()}")
-    val out = new OutputStreamWriter(fs.create(tmp, true), StandardCharsets.UTF_8)
-    try out.write(content) finally out.close()
-    val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
-    // local ChecksumFs renames the data file and its .crc sibling as TWO
-    // steps, so two concurrent overwrites of the same dst (e.g. vacuum's
-    // key-index sync beside an active appender) can interleave such that
-    // the loser's crc rename hits the winner's fresh .crc and throws
-    // FileAlreadyExistsException (observed under heavy host load). Both
-    // writers carry a complete value and last-writer-wins is the contract
-    // here, so clear the stale sibling and retry; readers tolerate a
-    // briefly absent .crc (ChecksumFs skips verification then).
-    var attempts = 0
-    var renamed = false
-    while (!renamed) {
-      try {
-        fc.rename(tmp, dst, Options.Rename.OVERWRITE)
-        renamed = true
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException if attempts < 3 =>
-          attempts += 1
-          fs.delete(new Path(dst.getParent, s".${dst.getName}.crc"), false)
-      }
-    }
-  }
+  def pin(): Pinned = pinned(current)
+
+  private def pinned(s: Option[Snapshot]): Pinned = Pinned(s, s.map(liveFiles).getOrElse(Nil))
 
   /** Highest committed snapshot id: max of the CURRENT hint and the
     * highest claimed v*.json (one metadata listing). The listing is what
     * makes a claim durable even if the claimer crashed before advancing
     * CURRENT — the pointer is a cache, the JSON claim is the truth. */
   def currentSnapshotId: Long = {
-    // tolerate a hint caught mid-replacement: Hadoop's OVERWRITE rename on
-    // local FS is delete-then-rename, so a concurrent reader can observe
+    // tolerate a hint caught mid-replacement: off local FS the OVERWRITE
+    // rename may be delete-then-rename, so a concurrent reader can observe
     // CURRENT briefly absent (or half-gone) — the claim listing below is
     // the durable truth either way
-    val hint = scala.util.Try(readFully(currentFile).trim.toLong).getOrElse(0L)
+    val hint = scala.util.Try(MetaFile.read(fs, currentFile).trim.toLong).getOrElse(0L)
     math.max(hint, maxIdIn(snapDir, "v", ".json"))
   }
 
@@ -185,7 +172,7 @@ final class IceTable(val root: String) {
     val p = new Path(snapDir, f"v$id%05d.json")
     if (!fs.exists(p)) None
     else {
-      val n = mapper.readTree(readFully(p))
+      val n = mapper.readTree(MetaFile.read(fs, p))
       val files = n.get("files").elements().asScala.map { f =>
         FileEntry(f.get("path").asText, f.get("rows").asLong, f.get("bytes").asLong,
           f.get("min_ts_us").asLong, f.get("max_ts_us").asLong)
@@ -194,7 +181,7 @@ final class IceTable(val root: String) {
       val delta = Option(n.get("delta")).exists(_.asBoolean) // absent (pre-delta log) = base
       val chainLen = Option(n.get("chain_len")).map(_.asInt).getOrElse(0)
       Some(Snapshot(n.get("id").asLong, n.get("parent_id").asLong, n.get("op").asText,
-        files, key, delta, chainLen))
+        files, key, delta, chainLen, MetaFile.schemaOf(n)))
     }
   }
 
@@ -235,6 +222,7 @@ final class IceTable(val root: String) {
     node.put("delta", s.delta)
     node.put("chain_len", s.chainLen)
     s.key.foreach(node.put("key", _))
+    s.schema.foreach(MetaFile.putSchema(node, _))
     val arr: ArrayNode = node.putArray("files")
     s.files.foreach { f =>
       val fn = arr.addObject()
@@ -246,7 +234,7 @@ final class IceTable(val root: String) {
 
   private def writeSnapshotJson(s: Snapshot): Unit = {
     fs.mkdirs(snapDir)
-    atomicWrite(new Path(snapDir, f"v${s.id}%05d.json"), snapshotJsonString(s))
+    MetaFile.write(fs, hadoopConf, new Path(snapDir, f"v${s.id}%05d.json"), snapshotJsonString(s))
   }
 
   /** COMMIT POINT: claim snapshots/v<id>.json by rename-WITHOUT-overwrite
@@ -262,10 +250,8 @@ final class IceTable(val root: String) {
   private[graft] def tryClaimSnapshot(s: Snapshot): Boolean = {
     fs.mkdirs(snapDir)
     val dst = new Path(snapDir, f"v${s.id}%05d.json")
-    val tmp = new Path(snapDir, s".${dst.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = new OutputStreamWriter(fs.create(tmp, true), StandardCharsets.UTF_8)
-    try out.write(snapshotJsonString(s)) finally out.close()
-    if (isLocalFs) claimLocalFs(tmp, dst)
+    val tmp = MetaFile.writeTemp(fs, dst, snapshotJsonString(s))
+    if (MetaFile.isLocal(fs)) claimLocalFs(tmp, dst)
     else {
       val fc = FileContext.getFileContext(rootPath.toUri, hadoopConf)
       try { fc.rename(tmp, dst); true }
@@ -282,8 +268,6 @@ final class IceTable(val root: String) {
       }
     }
   }
-
-  private def isLocalFs: Boolean = "file" == fs.getUri.getScheme
 
   /** Local-FS claim, serialized by an OS-mediated advisory file lock on a
     * PERMANENT per-table lock file (`snapshots/.commit.lock`): the holder
@@ -303,8 +287,7 @@ final class IceTable(val root: String) {
     * null tryLock — both read as claim-lost. Losers sleep ~50ms so the
     * bounded retry loop yields to a mid-rename competitor. */
   private def claimLocalFs(tmp: Path, dst: Path): Boolean = {
-    val lockPath = java.nio.file.Paths.get(
-      fs.makeQualified(new Path(snapDir, ".commit.lock")).toUri.getPath)
+    val lockPath = MetaFile.local(fs, new Path(snapDir, ".commit.lock"))
     // ONE never-closed channel per lock path per JVM (companion cache):
     // FileLock's javadoc allows closing ANY channel to a file to release
     // ALL of the JVM's locks on it, so a per-claim open/close let a losing
@@ -317,20 +300,15 @@ final class IceTable(val root: String) {
     val lock =
       try ch.tryLock()
       catch { case _: java.nio.channels.OverlappingFileLockException => null }
+    val (src, target) = (MetaFile.local(fs, tmp), MetaFile.local(fs, dst))
     if (lock == null) {
-      fs.delete(tmp, false): Unit
+      Files.deleteIfExists(src)
       Thread.sleep(50) // competitor holds the commit lock — yield, retry
       false
     } else {
       try {
-        if (fs.exists(dst)) { fs.delete(tmp, false); false }
-        else {
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(fs.makeQualified(tmp).toUri),
-            java.nio.file.Paths.get(fs.makeQualified(dst).toUri),
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          true
-        }
+        if (Files.exists(target)) { Files.deleteIfExists(src); false }
+        else { Files.move(src, target, StandardCopyOption.ATOMIC_MOVE); true }
       } finally lock.release()
     }
   }
@@ -358,24 +336,38 @@ final class IceTable(val root: String) {
       }
       val s = committed.get
       // CURRENT is a hint: never move it backwards over a faster writer
-      if (s.id > (if (fs.exists(currentFile)) scala.util.Try(readFully(currentFile).trim.toLong).getOrElse(0L) else 0L))
-        atomicWrite(currentFile, s.id.toString)
+      if (s.id > (if (fs.exists(currentFile)) scala.util.Try(MetaFile.read(fs, currentFile).trim.toLong).getOrElse(0L) else 0L))
+        MetaFile.write(fs, hadoopConf, currentFile, s.id.toString)
       s
     }
 
-  /** Per-file (rows, min ts, max ts, bytes) stats of a committed data dir. */
-  private def statsOf(spark: SparkSession, dir: Path, tsCol: String): Seq[FileEntry] = {
-    val rows = spark.read.parquet(dir.toString)
-      .groupBy(input_file_name().as("f"))
-      .agg(count(lit(1)).as("rows"),
-        min(unix_micros(col(tsCol).cast("timestamp"))).as("lo"),
-        max(unix_micros(col(tsCol).cast("timestamp"))).as("hi"))
+  /** Per-file (rows, min ts, max ts, bytes) stats of a committed data dir
+    * written with `schema`, in ONE job with no exchange: each task folds
+    * its rows into per-file partials and the driver merges the few
+    * partials of a file split across tasks. Byte sizes come from one
+    * listing of the dir. */
+  private def statsOf(spark: SparkSession, dir: Path, tsCol: String, schema: StructType): Seq[FileEntry] = {
+    val partials = spark.read.schema(schema).parquet(dir.toString)
+      .select(input_file_name(), unix_micros(col(tsCol).cast("timestamp")))
+      .mapPartitions { (it: Iterator[Row]) =>
+        val acc = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
+        it.foreach { r =>
+          val (n, lo, hi) = acc.getOrElse(r.getString(0), (0L, Long.MaxValue, Long.MinValue))
+          acc(r.getString(0)) =
+            if (r.isNullAt(1)) (n + 1, lo, hi)
+            else (n + 1, math.min(lo, r.getLong(1)), math.max(hi, r.getLong(1)))
+        }
+        acc.iterator.map { case (f, (n, lo, hi)) => (f, n, lo, hi) }
+      }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.scalaLong, Encoders.scalaLong))
       .collect()
-    rows.map { r =>
-      val p = new Path(new java.net.URI(r.getAs[String]("f")))
-      FileEntry(p.toString, r.getAs[Long]("rows"), fs.getFileStatus(p).getLen,
-        r.getAs[Long]("lo"), r.getAs[Long]("hi"))
-    }.toSeq
+    val sizes = fs.listStatus(dir).map(s => s.getPath.getName -> s.getLen).toMap
+    partials.groupBy(_._1).map { case (f, ps) =>
+      val p = new Path(new java.net.URI(f))
+      val (lo, hi) = (ps.map(_._3).min, ps.map(_._4).max)
+      // a file whose ts values are all NULL has no range: it records 0/0
+      FileEntry(p.toString, ps.map(_._2).sum, sizes(p.getName),
+        if (lo == Long.MaxValue) 0L else lo, if (hi == Long.MinValue) 0L else hi)
+    }.toSeq.sortBy(_.path)
   }
 
   /** Write df's files and move them into a UUID-named data dir (no id yet:
@@ -398,7 +390,7 @@ final class IceTable(val root: String) {
   private def readKeyIndex(): (Long, Map[String, Long]) =
     if (!fs.exists(keyIndexFile)) (0L, Map.empty)
     else scala.util.Try {
-      val n = mapper.readTree(readFully(keyIndexFile))
+      val n = mapper.readTree(MetaFile.read(fs, keyIndexFile))
       val keys = Option(n.get("keys")).map { kn =>
         kn.properties().asScala.map(e => e.getKey -> e.getValue.asLong).toMap
       }.getOrElse(Map.empty[String, Long])
@@ -427,7 +419,7 @@ final class IceTable(val root: String) {
       node.put("up_to", curId)
       val kn = node.putObject("keys")
       merged.foreach { case (k, v) => kn.put(k, v) }
-      atomicWrite(keyIndexFile, mapper.writeValueAsString(node))
+      MetaFile.write(fs, hadoopConf, keyIndexFile, mapper.writeValueAsString(node))
       merged
     }
   }
@@ -451,14 +443,17 @@ final class IceTable(val root: String) {
       // stage data ONCE (the expensive part); the claim loop below only
       // rebuilds cheap manifest metadata if a concurrent writer wins an id
       val dir = stageDataDir(df)
-      val entries = statsOf(df.sparkSession, dir, tsCol)
+      val schema = df.schema
+      val entries = statsOf(df.sparkSession, dir, tsCol, schema)
       val snap = claimCommit { (parent, id) =>
         val newChainLen = parent.map(_.chainLen + 1).getOrElse(1)
         if (parent.isEmpty || newChainLen >= BaseEvery)
           Snapshot(id, parent.map(_.id).getOrElse(0L), "append",
-            parent.map(liveFiles).getOrElse(Nil) ++ entries, key, delta = false, chainLen = 0)
+            parent.map(liveFiles).getOrElse(Nil) ++ entries, key, delta = false, chainLen = 0,
+            schema = Some(schema))
         else
-          Snapshot(id, parent.get.id, "append", entries, key, delta = true, chainLen = newChainLen)
+          Snapshot(id, parent.get.id, "append", entries, key, delta = true, chainLen = newChainLen,
+            schema = Some(schema))
       }
       syncKeyIndex() // post-commit; stale-only on crash, healed next lookup
       snap.id
@@ -467,22 +462,31 @@ final class IceTable(val root: String) {
   /** Scan the current snapshot, optionally pruned to files overlapping
     * [loUs, hiUs] via manifest stats (no parquet touched outside range). */
   def scan(spark: SparkSession, loUs: Long = Long.MinValue, hiUs: Long = Long.MaxValue): DataFrame =
-    scanSnapshot(spark, current, loUs, hiUs)
+    scanPinned(spark, pin(), loUs, hiUs)
 
   /** Time travel: scan a PAST snapshot by id (data files are immutable and
     * expiry/rewrite are metadata-only, so every committed snapshot stays
     * readable — the Iceberg `VERSION AS OF` analog). */
   def scanAt(spark: SparkSession, snapshotId: Long, loUs: Long = Long.MinValue, hiUs: Long = Long.MaxValue): DataFrame = {
-    require(snapshot(snapshotId).isDefined, s"unknown snapshot id $snapshotId for table $root")
-    scanSnapshot(spark, snapshot(snapshotId), loUs, hiUs)
+    val s = snapshot(snapshotId)
+    require(s.isDefined, s"unknown snapshot id $snapshotId for table $root")
+    scanPinned(spark, pinned(s), loUs, hiUs)
   }
 
-  private def scanSnapshot(spark: SparkSession, s: Option[Snapshot], loUs: Long, hiUs: Long): DataFrame = {
-    val files = s.map(liveFiles).getOrElse(Nil)
+  /** Scan a pinned snapshot, pruned like `scan`. The snapshot's recorded
+    * schema is handed to the reader, so no schema-inference job runs; an
+    * empty selection is an empty DataFrame of that schema. Snapshots that
+    * predate the `schema` field fall back to inference (and to a
+    * column-less empty DataFrame). */
+  def scanPinned(spark: SparkSession, p: Pinned, loUs: Long = Long.MinValue, hiUs: Long = Long.MaxValue): DataFrame = {
+    val files = p.files
       .filter(f => f.maxTsUs >= loUs && f.minTsUs <= hiUs)
       .map(_.path)
-    if (files.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(files: _*)
+    val schema = p.snapshot.flatMap(_.schema)
+    if (files.isEmpty)
+      schema.fold(spark.emptyDataFrame)(sc =>
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), sc))
+    else schema.fold(spark.read)(spark.read.schema(_)).parquet(files: _*)
   }
 
   /** Retention expiry: metadata-only snapshot dropping files entirely older
@@ -496,7 +500,7 @@ final class IceTable(val root: String) {
       // kept set re-derived per claim attempt: a concurrent append between
       // attempts is thereby included, never silently dropped
       val kept = parent.map(liveFiles).getOrElse(Nil).filter(_.maxTsUs >= cutoffUs)
-      Snapshot(id, parent.map(_.id).getOrElse(0L), "expire", kept)
+      Snapshot(id, parent.map(_.id).getOrElse(0L), "expire", kept, schema = parent.flatMap(_.schema))
     }.id
 
   /** Compaction rewrite: coalesce the current file set into ~`targetFiles`
@@ -510,16 +514,20 @@ final class IceTable(val root: String) {
     // append/expire it CANNOT absorb a concurrent commit by rebuilding
     // metadata — if the parent moved while we compacted, committing would
     // silently drop the racer's files. Detect and refuse instead.
-    val parentAtScan = currentSnapshotId
-    val df = scan(spark).coalesce(math.max(targetFiles, 1))
+    val atScan = pin()
+    val parentAtScan = atScan.id
+    val df = scanPinned(spark, atScan).coalesce(math.max(targetFiles, 1))
     val dir = stageDataDir(df)
-    val entries = statsOf(spark, dir, tsCol)
+    // the parent's schema carried forward; a pre-schema parent's is the
+    // one its scan just inferred
+    val schema = atScan.snapshot.flatMap(_.schema).getOrElse(df.schema)
+    val entries = statsOf(spark, dir, tsCol, schema)
     claimCommit { (parent, id) =>
       val pid = parent.map(_.id).getOrElse(0L)
       if (pid != parentAtScan)
         throw new java.util.ConcurrentModificationException(
           s"rewriteCompact on $root: snapshot moved $parentAtScan -> $pid during compaction; re-run")
-      Snapshot(id, pid, "rewrite", entries)
+      Snapshot(id, pid, "rewrite", entries, schema = Some(schema))
     }.id
   }
 
@@ -638,7 +646,7 @@ final class IceTable(val root: String) {
               fs.delete(f.getPath, false): Unit
             }
           }
-        } else if (n.startsWith(".") && n.contains(".claim-") && f.getModificationTime < ageCutoff) {
+        } else if (n.startsWith(".") && n.contains(".tmp-") && f.getModificationTime < ageCutoff) {
           // abandoned claim temp (writer died mid-claim) — grace-aged
           fs.delete(f.getPath, false): Unit
         }

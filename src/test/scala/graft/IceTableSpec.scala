@@ -2,9 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.operators.{CheckpointedRollup, Rollup}
-import graft.sources.{IceTable, TranscriptGen}
+import graft.sources.{IceTable, MetaFile, TranscriptGen}
 
 /** Snapshot lineage, stat pruning, retention expiry, and crash-resume
   * (SURVEY.md §5.6). */
@@ -439,5 +440,126 @@ class IceTableSpec extends SparkSpec {
     val a = spark.read.parquet(s"$outDir/day=*").orderBy("conv_id", "bucket_start").collect()
     val b = spark.read.parquet(s"$freshDir/day=*").orderBy("conv_id", "bucket_start").collect()
     assert(a.sameElements(b))
+  }
+
+  test("batched day units: a NULL day bucket fails the contract check before any day commits") {
+    val rows = Seq(
+      ("c1", "2025-02-01 10:00:00", 3.0),
+      ("c2", "2025-02-02 11:00:00", 5.0))
+      .toDF("conv_id", "tss", "text_len")
+      .select($"conv_id", to_timestamp($"tss").as("ts"), $"text_len")
+    val t = IceTable(tmp("ice-null-bucket"))
+    t.append(rows.coalesce(1).sortWithinPartitions("ts"), "ts")
+    val outDir = tmp("tier-null-bucket")
+    // c2's bucket is NULL: Spark writes it to day=__HIVE_DEFAULT_PARTITION__
+    val e = intercept[IllegalArgumentException] {
+      CheckpointedRollup.runUnits(spark, new CheckpointedRollup.IceDaySource(t), outDir,
+        raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute")
+          .withColumn("bucket_start",
+            when(col("conv_id") === "c2", lit(null).cast("timestamp")).otherwise(col("bucket_start"))),
+        parallelism = 1, dayBucket = Some(col("bucket_start")), unitBatch = 2)
+    }
+    assert(e.getMessage.contains("null day bucket"), e.getMessage)
+    val committed = new java.io.File(outDir).list().filter(_.startsWith("day="))
+    val markers = new java.io.File(outDir, "_checkpoints").list()
+    assert(committed.isEmpty && markers.isEmpty,
+      s"no day may commit: ${committed.mkString(",")} / ${markers.mkString(",")}")
+  }
+
+  test("MetaFile: concurrent overwrites never throw, readers parse whole values, a .crc file stays readable") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(tmp("meta"))
+    val fs = dir.getFileSystem(conf)
+    val dst = new Path(dir, "keys.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    // the value's length depends on its content, so a torn read cannot parse as whole
+    def value(w: Int, k: Int) = s"""{"w":$w,"k":$k,"pad":"${"x" * (k % 97)}"}"""
+    def whole(s: String): Boolean = scala.util.Try {
+      val n = mapper.readTree(s)
+      n.get("pad").asText.length == n.get("k").asInt % 97
+    }.getOrElse(false)
+
+    // first written the way older code wrote it: a checksummed Hadoop
+    // create, which leaves a .crc sibling next to the file
+    val out = fs.create(dst, true)
+    try out.write(value(-1, 500).getBytes("UTF-8")) finally out.close()
+    val crc = new java.io.File(dir.toUri.getPath, ".keys.json.crc")
+    assert(crc.exists())
+    MetaFile.write(fs, conf, dst, value(-2, 3))
+    assert(MetaFile.read(fs, dst) == value(-2, 3), "read through Hadoop after the overwrite")
+    assert(!crc.exists(), "the stale checksum must go with the first overwrite")
+
+    val writers = 4
+    val perWriter = 50
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(writers + 1)
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    try {
+      val reader = pool.submit(new java.util.concurrent.Callable[(Int, Int)] {
+        def call(): (Int, Int) = {
+          var (reads, torn) = (0, 0)
+          while (running.get()) {
+            reads += 1
+            if (!whole(MetaFile.read(fs, dst))) torn += 1
+          }
+          (reads, torn)
+        }
+      })
+      val writes = (0 until writers).map { w =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = (0 until perWriter).foreach(k => MetaFile.write(fs, conf, dst, value(w, k)))
+        })
+      }
+      writes.foreach(_.get()) // rethrows any writer's exception
+      running.set(false)
+      val (reads, torn) = reader.get()
+      assert(reads > 0 && torn == 0, s"$torn of $reads reads saw a partial value")
+    } finally pool.shutdown()
+    assert(whole(MetaFile.read(fs, dst)))
+    val left = new java.io.File(dir.toUri.getPath).list().filter(_ != "keys.json")
+    assert(left.isEmpty, s"no temp or checksum file may be left behind: ${left.mkString(",")}")
+  }
+
+  test("IceDaySource pins its snapshot: a later append changes none of its answers") {
+    val t = IceTable(tmp("ice-pin"))
+    val withLen = turnsDf.withColumn("text_len", length($"text").cast("double"))
+    t.append(withLen.where($"turn_idx" % 2 === 0), "ts")
+    val source = new CheckpointedRollup.IceDaySource(t)
+    val days = source.pendingDays
+    val fps = days.map(source.dayFingerprint)
+    val rows = source.scanDays(spark, days).count()
+    val id = source.lineageId
+    assert(id == 1L)
+
+    // a writer commits between the source's construction and its run
+    t.append(withLen.where($"turn_idx" % 2 === 1), "ts")
+    assert(source.lineageId == id, "lineage must name the pinned snapshot")
+    assert(source.pendingDays == days)
+    assert(days.map(source.dayFingerprint) == fps)
+    assert(source.scanDays(spark, days).count() == rows)
+    val fresh = new CheckpointedRollup.IceDaySource(t)
+    assert(fresh.lineageId == 2L && fresh.scanDays(spark, fresh.pendingDays).count() == turnsDf.count())
+
+    // a run from the pinned source builds and records the pinned snapshot
+    val outDir = tmp("tier-pin")
+    CheckpointedRollup.runUnits(spark, source, outDir,
+      raw => Rollup.rollupRaw(raw, col("conv_id"), col("ts"), col("text_len"), "1 minute"),
+      dayBucket = Some(col("bucket_start")))
+    val markerIds = new java.io.File(outDir, "_checkpoints").listFiles()
+      .filter(_.getName.endsWith(".json"))
+      .map(f => new com.fasterxml.jackson.databind.ObjectMapper().readTree(f).get("source_snapshot_id").asLong)
+    assert(markerIds.nonEmpty && markerIds.forall(_ == id), markerIds.mkString(","))
+    assert(spark.read.parquet(s"$outDir/day=*").agg(sum("n_rows")).head().getLong(0) == rows)
+  }
+
+  test("vacuum reclaims a claim temp abandoned by a writer that died mid-claim") {
+    val t = IceTable(tmp("ice"))
+    val id = t.append(turnsDf.limit(5).coalesce(1), "ts")
+    val abandoned = new java.io.File(s"${t.root}/snapshots/.v00002.json.tmp-dead-beef")
+    java.nio.file.Files.writeString(abandoned.toPath, "{}")
+    assert(t.vacuum(keepFromId = id)._1 == 0 && abandoned.exists(), "a fresh temp may be a live claim")
+    assert(abandoned.setLastModified(System.currentTimeMillis() - 2 * 3600 * 1000L))
+    t.vacuum(keepFromId = id)
+    assert(!abandoned.exists(), "a temp past the grace window is garbage")
+    assert(t.currentSnapshotId == id && t.scan(spark).count() == 5)
   }
 }

@@ -2,9 +2,16 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.apache.spark.grafttest.Bus
 import graft.functions.{Gorilla, GorillaAgg}
-import graft.operators.{Rollup, TierStore}
+import graft.operators.{CheckpointedRollup, Rollup, TierStore}
 import graft.sources.{IceTable, TranscriptGen}
 
 /** End-to-end north-star pipeline: raw IceTable → Gorilla tier IceTables →
@@ -132,5 +139,129 @@ class TierStoreSpec extends SparkSpec {
     assert(freed.head._3 > 0, s"1m tier must free bytes, got $freed")
     assert(tiers.t1m.scan(spark).count() == before1m)
     assert(tiers.t1d.scan(spark).count() > 0)
+  }
+
+  /** `f`'s result and the jobs it launches, in start order. */
+  private def jobsOf[T](f: => T): (T, Seq[SparkListenerJobStart]) = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = seen.add(e): Unit
+    }
+    Bus.drain(sc)
+    sc.addSparkListener(listener)
+    val result =
+      try { val r = f; Bus.drain(sc); r }
+      finally sc.removeSparkListener(listener)
+    (result, seen.asScala.toSeq)
+  }
+
+  /** A parquet schema-inference job is the one job these paths can launch
+    * outside a SQL execution (reads, writes and the stats pass all run
+    * inside one). */
+  private def isInference(j: SparkListenerJobStart): Boolean =
+    Option(j.properties).forall(_.getProperty("spark.sql.execution.id") == null)
+
+  /** Data of one event-time day: the last day of `turns`. */
+  private def lastDay(turns: org.apache.spark.sql.DataFrame) = {
+    val day = 86400000000L
+    val lastUs = turns.agg(max(unix_micros($"ts".cast("timestamp")))).head().getLong(0)
+    turns.where(unix_micros($"ts".cast("timestamp")) >= lastUs / day * day)
+  }
+
+  test("job guard: a one-day refresh runs no schema inference and at most 2 jobs per tier; append = write + 1 stats job") {
+    val turns = TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false)
+      .toDF.withColumn("text_len", length($"text").cast("double")).cache()
+    val src = IceTable(tmp("ice-guard"))
+    src.append(turns, "ts")
+    val root = tmp("tiers-guard")
+    TierStore.sync(spark, src, root, $"text_len")
+
+    // the detector is live: an unschema'd read of a day dir infers
+    val someDay = new java.io.File(s"$root/1m").list().filter(_.startsWith("day=")).head
+    assert(jobsOf(spark.read.parquet(s"$root/1m/$someDay"))._2.exists(isInference))
+
+    val late = lastDay(turns).cache()
+    late.count()
+    val writeJobs = jobsOf(late.write.parquet(tmp("guard-write") + "/w"))._2.size
+    val (_, appendJobs) = jobsOf(src.append(late, "ts"))
+    assert(!appendJobs.exists(isInference), s"append inferred a schema: ${appendJobs.map(_.jobId)}")
+    assert(appendJobs.size <= writeJobs + 1,
+      s"append ran ${appendJobs.size} jobs; its write alone runs $writeJobs")
+
+    val ((r1m, r1h, r1d), syncJobs) = jobsOf(TierStore.sync(spark, src, root, $"text_len"))
+    val rebuilt = Seq(r1m, r1h, r1d).map(_.count(!_.skipped))
+    assert(rebuilt == Seq(1, 1, 1), s"a one-day refresh rebuilds one day per tier, got $rebuilt")
+    assert(!syncJobs.exists(isInference), s"sync inferred a schema: ${syncJobs.map(_.jobId)}")
+    assert(syncJobs.size <= 2 * 3, s"sync ran ${syncJobs.size} jobs for 3 tiers")
+  }
+
+  test("a table and store in the pre-schema format still scan, and a sync skips every unchanged day") {
+    val turns = TranscriptGen.turns(spark, nConvs = 12L, withDuplicates = false)
+      .toDF.withColumn("text_len", length($"text").cast("double")).cache()
+    val src = IceTable(tmp("ice-compat"))
+    src.append(turns, "ts")
+    val root = tmp("tiers-compat")
+    TierStore.sync(spark, src, root, $"text_len")
+
+    // a schema-carrying scan reads with exactly the schema inference gives,
+    // nullability and timestamp types included
+    val paths = src.currentLiveFiles.map(_.path)
+    assert(src.scan(spark).schema == spark.read.parquet(paths: _*).schema)
+    for (tier <- Seq("1m", "1h", "1d")) {
+      val days = new CheckpointedRollup.DayDirSource(spark, s"$root/$tier")
+      days.pendingDays.foreach { d =>
+        assert(days.scanDay(spark, d).schema == spark.read.parquet(s"$root/$tier/day=$d").schema, s"$tier $d")
+      }
+    }
+
+    // rewrite every metadata file as older code wrote it: no schema field,
+    // and a checksummed Hadoop create, which leaves a .crc sibling
+    val conf = spark.sparkContext.hadoopConfiguration
+    val mapper = new ObjectMapper()
+    def downgrade(f: java.io.File): Unit = {
+      val text = mapper.readTree(f) match {
+        case n: ObjectNode => n.remove("schema"); mapper.writeValueAsString(n)
+        case n => n.toString
+      }
+      val p = new Path(f.toURI)
+      val out = p.getFileSystem(conf).create(p, true)
+      try out.write(text.getBytes("UTF-8")) finally out.close()
+    }
+    def jsons(dir: String) =
+      new java.io.File(dir).listFiles().filter(f => !f.getName.startsWith(".") && f.getName.endsWith(".json"))
+    val metadata = jsons(s"${src.root}/snapshots") ++ Seq("1m", "1h", "1d").flatMap(t => jsons(s"$root/$t/_checkpoints")) ++
+      Seq(new java.io.File(s"${src.root}/CURRENT"), new java.io.File(s"${src.root}/keys.json"))
+    metadata.foreach(downgrade)
+    metadata.foreach(f => assert(new java.io.File(f.getParent, s".${f.getName}.crc").exists(), f))
+    assert(src.current.get.schema.isEmpty)
+
+    // scans fall back to inference
+    assert(src.scan(spark).count() == turns.count())
+    val d1m = new CheckpointedRollup.DayDirSource(spark, s"$root/1m")
+    assert(d1m.scanDays(spark, d1m.pendingDays).agg(sum("n_rows")).head().getLong(0) == turns.count())
+
+    // the schema field is outside every fingerprint: nothing rebuilds
+    val (a1m, a1h, a1d) = TierStore.sync(spark, src, root, $"text_len")
+    assert(Seq(a1m, a1h, a1d).forall(_.forall(_.skipped)), s"unchanged days rebuilt: $a1m $a1h $a1d")
+
+    // a late batch in the last day: new commits overwrite the .crc-bearing
+    // CURRENT, keys.json and that day's markers, which stay readable
+    val late = lastDay(turns)
+    src.append(late, "ts")
+    val (b1m, b1h, b1d) = TierStore.sync(spark, src, root, $"text_len")
+    for ((r, tier) <- Seq((b1m, "1m"), (b1h, "1h"), (b1d, "1d"))) {
+      val redone = r.filter(!_.skipped).map(_.dayUs)
+      assert(redone.size == 1 && r.exists(_.skipped), s"$tier: want one rebuilt day, got $r")
+      assert(!new java.io.File(s"$root/$tier/_checkpoints/.day-${redone.head}.json.crc").exists())
+    }
+    assert(!new java.io.File(s"${src.root}/.CURRENT.crc").exists())
+    val all = turns.unionByName(late)
+    assert(src.scan(spark).count() == all.count())
+    def canon(df: org.apache.spark.sql.DataFrame) = df
+      .select($"conv_id", $"bucket_start", $"n_rows", round($"sum", 6).as("s"), $"min", $"max")
+      .orderBy("conv_id", "bucket_start").collect().toSeq
+    assert(canon(TierStore.scanTier(spark, s"$root/1d")) ==
+      canon(Rollup.rollupRaw(all, $"conv_id", $"ts", $"text_len", "1 day")))
   }
 }
